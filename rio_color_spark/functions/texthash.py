@@ -92,10 +92,6 @@ def shingles3_col(text: Column) -> Column:
     return shingles3_from_tokens(tokens_col(text))
 
 
-def shingle_hashes_col(text: Column) -> Column:
-    return F.transform(shingles3_col(text), token_hash_col)
-
-
 def minhash_col(hashes: Column, j: int) -> Column:
     """j-th MinHash over an array<long> of element hashes (P on empty)."""
     a, b = MINHASH_A[j], MINHASH_B[j]
@@ -168,16 +164,6 @@ def simhash_agg_sql(hashes_sql: str, n_sql: str) -> str:
 
 def simhash_agg_expr(hashes_sql: str, n_sql: str) -> Column:
     return F.expr(simhash_agg_sql(hashes_sql, n_sql))
-
-
-def minhash_sig_cols(hashes: Column) -> list[Column]:
-    return [minhash_col(hashes, j).alias(f"mh{j}") for j in range(N_MINHASH)]
-
-
-def band_sig_col(band: int) -> Column:
-    """LSH band signature from already-materialized mh0..mh15 columns."""
-    cols = [F.col(f"mh{band * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-    return F.concat_ws("-", *cols)
 
 
 def simhash_col(hashes: Column) -> Column:

@@ -98,15 +98,6 @@ def _materialize(df: DataFrame, cols: dict) -> DataFrame:
     return out.select("*", *[F.col(f"_m.{n}").alias(n) for n in cols]).drop("_m")
 
 
-def _parse_bytes(s: str) -> int:
-    """'128m'-style byte strings (Spark conf values) → bytes."""
-    s = s.strip().lower()
-    for suffix, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if s.endswith(suffix):
-            return int(float(s[: -len(suffix)]) * mult)
-    return int(s)
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Parallelism guard for heavy per-row map stages.
 
@@ -132,7 +123,9 @@ def _spread(df: DataFrame) -> DataFrame:
         if len(files) >= target:
             return df
         try:
-            mpb = _parse_bytes(
+            # Spark's own byte-string parser: accepts every spelling the
+            # conf does ('128m', '128mb', '64kb', '1g', plain bytes)
+            mpb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
                 spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
             )
             import os

@@ -3,7 +3,8 @@
     read images → spatial index (lon/lat, XYZ tiles, cells)
         → PIP assignment (fused, pixel-free poly_ids column)
         → fused color-correct (single mapInPandas)
-        → chunked checkpointed write (images + assignments + lineage)
+        → chunked checkpointed write (images + assignments; one
+          snapshot-log commit per chunk carries the lineage)
 
 Plan properties at scale:
 
@@ -110,8 +111,8 @@ def chunk_plan(
     run reads each source byte exactly once and resume skips committed
     chunks at the scan. With Iceberg this is manifest-level split
     planning; on the Parquet facade it is the file listing. Each stripe's
-    fingerprint is the md5 of its sorted file list — recorded in the chunk
-    manifest and re-checked on resume, because file-striped chunking is
+    fingerprint is the md5 of its sorted file list — recorded in the chunk's
+    commit and re-checked on resume, because file-striped chunking is
     layout-DEPENDENT: if the source was rewritten/compacted between runs,
     stripe k silently maps to different rows (ADVICE r2), so a mismatch
     must fail fast instead of duplicating/dropping rows.
@@ -157,13 +158,6 @@ def chunk_plan(
     return readers, [None] * n_chunks
 
 
-def chunk_readers(
-    spark: SparkSession, images: DataFrame | str, n_chunks: int
-) -> list:
-    """The readers half of :func:`chunk_plan` (kept as the simple API)."""
-    return chunk_plan(spark, images, n_chunks)[0]
-
-
 def run_pipeline(
     spark: SparkSession,
     images: DataFrame | str,
@@ -184,18 +178,19 @@ def run_pipeline(
     ``images`` may be a parquet path (preferred: file-stripe chunking, one
     scan per input byte) or a DataFrame. ``fail_after`` simulates a crash
     after N chunk commits (resume tests). ``write_options`` are creation
-    options applied to every chunk write (e.g. compression codec).
+    options applied to every chunk write (e.g. compression codec); the
+    default is lz4 with dictionary encoding off (see below), and ``{}``
+    keeps the session's codec and dictionary defaults.
 
-    ``snapshot_base`` additionally maintains a
+    ``snapshot_base`` is where the pipeline's only commit ledger lives
+    (default ``<out_base>/_snapshots``): a
     :class:`~rio_color_spark.sources.snapshots.SnapshotTable` over the
-    colored-images output: each chunk's already-written parquet files are
-    registered via the metadata-only ``add_files`` commit (zero data
-    copy), stamped ``pipeline_chunk`` in the snapshot summary. The
-    snapshot log then gives the pipeline output atomic visibility,
-    per-chunk time travel, and a second idempotence ledger — a crash
-    between the chunk manifest commit and the snapshot commit heals on
-    the next run (any committed chunk missing from the log is re-added;
-    any chunk already in the log is skipped).
+    colored-images output. Each chunk commits once, as a metadata-only
+    ``add_files`` snapshot of its already-written images files (zero data
+    copy) whose summary carries ``pipeline_chunk``, ``stripe_md5`` and
+    every output's ``paths`` and row ``counts``. Resume, the stripe check
+    and idempotent re-runs all read that snapshot log; it also gives the
+    output atomic visibility and per-chunk time travel.
     """
     # default codec for pipeline outputs: lz4. The dominant output bytes
     # are colored pixel payloads (incompressible), where the session's
@@ -210,29 +205,21 @@ def run_pipeline(
             # buffers + hashes every value, then falls back to plain pages
             "parquet.enable.dictionary": "false",
         }
-    writer = CheckpointedWriter(out_base, write_options)
+    writer = CheckpointedWriter(out_base, write_options, snapshot_base)
     readers, fps = chunk_plan(spark, images, n_chunks)
 
     done = writer.committed()
     # layout-stability check (ADVICE r2): a committed chunk whose recorded
     # stripe no longer matches the current file listing means the source
     # was rewritten between runs — resuming would duplicate/drop rows
-    for k, rec in done.items():
-        want = rec.get("stripe_md5")
+    for k, snap in done.items():
+        want = snap["summary"].get("stripe_md5")
         if want is not None and k < len(fps) and fps[k] != want:
             raise RuntimeError(
                 f"chunk {k}: source file stripe changed since its commit "
-                f"(manifest {want}, current {fps[k]}) — the source was "
+                f"(ledger {want}, current {fps[k]}) — the source was "
                 "rewritten/compacted; restart from a fresh out_base"
             )
-    snap = _SnapshotSink(snapshot_base) if snapshot_base else None
-    if snap:
-        # heal: chunks whose manifest commit landed but whose snapshot
-        # commit didn't (crash in the window between the two ledgers)
-        for k, rec in sorted(done.items()):
-            path = (rec.get("paths") or {}).get("images")
-            if path:
-                snap.commit_chunk(k, path, rec.get("stripe_md5"))
 
     completed = 0
     for k in range(n_chunks):
@@ -272,56 +259,7 @@ def run_pipeline(
         writer.commit_chunk(
             k, paths, extra={"stripe_md5": fps[k]} if fps[k] else None
         )
-        if snap:
-            snap.commit_chunk(k, paths["images"], fps[k] or None)
         completed += 1
         if fail_after is not None and completed >= fail_after:
             raise RuntimeError(f"simulated crash after {completed} chunks")
     return writer
-
-
-class _SnapshotSink:
-    """Registers pipeline chunk outputs in a SnapshotTable via metadata-
-    only ``add_files`` commits, idempotent by ``pipeline_chunk``."""
-
-    def __init__(self, base: str):
-        self.base = base
-        self._tbl = None
-
-    def _table(self, sample_file: str):
-        """Open the table, creating it on first use from a written file's
-        footer schema (arrow → Spark simpleString via an empty read)."""
-        from rio_color_spark.sources.snapshots import SnapshotTable
-
-        if self._tbl is None:
-            try:
-                self._tbl = SnapshotTable(self.base)
-                self._tbl.metadata()
-            except FileNotFoundError:
-                spark = SparkSession.getActiveSession()
-                ddl = ", ".join(
-                    f"`{f.name}` {f.dataType.simpleString()}"
-                    for f in spark.read.parquet(sample_file).schema.fields
-                )
-                self._tbl = SnapshotTable.create(self.base, ddl)
-        return self._tbl
-
-    def commit_chunk(self, k: int, images_path: str, stripe_md5) -> None:
-        files = sorted(
-            os.path.join(images_path, f)
-            for f in os.listdir(images_path)
-            if f.endswith(".parquet")
-        )
-        if not files:
-            return
-        tbl = self._table(files[0])
-        already = {
-            s["summary"].get("pipeline_chunk")
-            for s in tbl.metadata()["snapshots"]
-        }
-        if k in already:
-            return
-        extra = {"pipeline_chunk": k}
-        if stripe_md5:
-            extra["stripe_md5"] = stripe_md5
-        tbl.add_files(files, summary_extra=extra)

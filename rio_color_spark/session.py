@@ -49,6 +49,14 @@ _WORKER_ENV_PINS = {
 }
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of physical
+    memory, at most 48g. A fixed 48g heap on a small host lets the JVM grow
+    past what the machine holds."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 48 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "rio_color_spark",
     master: str | None = None,
@@ -80,7 +88,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.parquet.compression.codec", "zstd")
         # binary image payloads compress poorly and dictionary-encode worse
         .config("spark.sql.parquet.enableVectorizedReader", "true")

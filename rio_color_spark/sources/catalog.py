@@ -1,116 +1,77 @@
-"""Storage facade: Iceberg-style committed writes, lineage, and resume.
+"""Storage facade: chunked, resumable, lineage-tracked pipeline writes.
 
 The north rule requires every stage to write per-partition lineage +
 row-count metrics to a checkpoint table so a killed job resumes from the
 last committed partition. With an Iceberg runtime on the classpath the
-engine uses ``df.writeTo(table).append()`` per chunk (Iceberg commits are
-already atomic, and the lineage table is a regular Iceberg table). This
-container has no Iceberg jars (SURVEY.md §7), so the facade provides the
-same contract over plain Parquet:
+engine would ``df.writeTo(table).append()`` per chunk. This container has
+no Iceberg jars (SURVEY.md §7), so the facade keeps the same contract with
+ONE ledger, a :class:`~rio_color_spark.sources.snapshots.SnapshotTable`:
 
-- data lands under ``<base>/data/chunk=<k>/`` (one directory per chunk,
-  written with overwrite semantics so a re-run of a half-written chunk is
-  idempotent)
-- a chunk is COMMITTED only when a manifest row exists under
-  ``<base>/_manifest/``; manifest rows are one-row PARQUET files (so the
-  manifest is itself a queryable lineage table — :meth:`lineage_df` — the
-  Iceberg metadata-table analogue), written via tmp-file + ``os.replace``
-  (atomic on POSIX), AFTER the data write returns. Legacy ``.json``
-  manifest rows from older runs are still read.
-- resume = read the manifest, skip committed chunks; chunk inputs can be
-  fingerprinted (``extra={"stripe_md5": ...}``) so a resume over a
-  rewritten/compacted source fails fast instead of silently reassigning
-  rows (pipeline.run_pipeline does this for file-striped chunks)
+- data lands under ``<base>/<output>/chunk=<k>/`` (one directory per
+  output and chunk, written with overwrite semantics so a re-run of a
+  half-written chunk is idempotent)
+- a chunk is COMMITTED only when its snapshot exists: one metadata-only
+  ``add_files`` of the chunk's ``images`` files, made AFTER every output
+  write returns. Its summary carries ``pipeline_chunk``, each output's
+  ``paths`` and footer row ``counts``, and any ``extra`` (the pipeline
+  records the chunk's input fingerprint ``stripe_md5`` there)
+- resume = read the snapshot log, skip committed chunks; a resume over a
+  rewritten/compacted source fails fast on the recorded fingerprint
+  (pipeline.run_pipeline)
+- lineage = ``SnapshotTable.history()``: one row per commit, with the
+  summary (chunk, paths, counts) as JSON
 
-The contract (committed-chunk list, per-chunk lineage/row counts,
-idempotent re-run, crash between data-write and manifest-write →
-chunk re-runs) is itself under test (tests/test_checkpoint.py).
+The ledger lives at ``<base>/_snapshots`` unless the caller names another
+path. A commit reads parquet footers and writes table metadata only: no
+Spark job, no Spark reader call. The contract (committed-chunk list,
+per-chunk row counts, idempotent re-run, crash before the commit → chunk
+re-runs) is under test (tests/test_checkpoint.py).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rio_color_spark.sources.snapshots import SnapshotTable
+
+
+def _parquet_files(path: str) -> list[str]:
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+    )
+
 
 class CheckpointedWriter:
-    """Chunked, resumable, lineage-tracked writer over the Parquet facade."""
+    """Chunked, resumable, lineage-tracked writer; its ledger is a
+    :class:`SnapshotTable` of the ``images`` output."""
 
-    def __init__(self, base_path: str, write_options: dict | None = None):
+    def __init__(
+        self, base_path: str, write_options: dict | None = None,
+        ledger_path: str | None = None,
+    ):
         """``write_options`` are writer creation options applied to every
         data write (the facade analogue of GDAL creation options /
         Iceberg table properties — reference cli.py:85 ``--co``), e.g.
-        ``{"compression": "zstd"}``."""
+        ``{"compression": "zstd"}``. ``ledger_path`` is where the snapshot
+        table lives (default ``<base_path>/_snapshots``)."""
         self.base = base_path.rstrip("/")
         self.write_options = dict(write_options or {})
-        self.manifest_dir = os.path.join(self.base, "_manifest")
-        os.makedirs(self.manifest_dir, exist_ok=True)
-
-    # -- manifest ------------------------------------------------------------
+        self.table = SnapshotTable(ledger_path or os.path.join(self.base, "_snapshots"))
 
     def committed(self) -> dict[int, dict]:
-        """chunk_id → manifest record for every committed chunk."""
-        import pyarrow.parquet as pq
-
-        out: dict[int, dict] = {}
-        for name in sorted(os.listdir(self.manifest_dir)):
-            path = os.path.join(self.manifest_dir, name)
-            if name.endswith(".parquet"):
-                rec = pq.read_table(path).to_pylist()[0]
-            elif name.endswith(".json"):  # pre-r3 manifests
-                with open(path) as f:
-                    rec = json.load(f)
-            else:
-                continue
-            out[rec["chunk"]] = rec
-        return out
-
-    def _commit(self, record: dict) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        name = f"chunk-{record['chunk']:06d}.parquet"
-        tmp = os.path.join(self.manifest_dir, f".{name}.{uuid.uuid4().hex}.tmp")
-        pq.write_table(pa.Table.from_pylist([record]), tmp)
-        os.replace(tmp, os.path.join(self.manifest_dir, name))  # atomic
-
-    def lineage_df(self, spark: SparkSession) -> DataFrame:
-        """The manifest as a queryable lineage table: one row per
-        (chunk, output name) with row count, path, lineage id, commit time
-        — the Parquet-facade analogue of Iceberg's metadata tables."""
-        rows = []
-        for rec in self.committed().values():
-            paths = rec.get("paths") or {"data": rec.get("path")}
-            counts = rec.get("counts") or {}
-            for name, path in paths.items():
-                rows.append(
-                    (
-                        int(rec["chunk"]),
-                        name,
-                        path,
-                        int(counts.get(name, rec.get("n_rows", 0)) or 0),
-                        rec.get("lineage_id"),
-                        float(rec.get("committed_at", 0.0)),
-                    )
-                )
-        return spark.createDataFrame(
-            rows,
-            "chunk int, name string, path string, n_rows long, "
-            "lineage_id string, committed_at double",
-        )
-
-    # -- data ----------------------------------------------------------------
-
-    def chunk_path(self, chunk: int) -> str:
-        return os.path.join(self.base, "data", f"chunk={chunk}")
-
-    def write_chunk(self, df: DataFrame, chunk: int, extra: dict | None = None) -> dict:
-        """Write one chunk + commit its lineage record. Idempotent per chunk."""
-        return self.write_chunk_multi({"data": df}, chunk, extra)
+        """chunk_id → its snapshot (``snapshot_id``, ``timestamp_ms``,
+        ``summary``) for every committed chunk."""
+        try:
+            snaps = self.table.metadata()["snapshots"]
+        except FileNotFoundError:
+            return {}
+        return {
+            s["summary"]["pipeline_chunk"]: s
+            for s in snaps
+            if "pipeline_chunk" in s["summary"]
+        }
 
     def write_data(self, df: DataFrame, name: str, chunk: int) -> str:
         """Write one named output of a chunk (no commit yet); returns path."""
@@ -118,100 +79,53 @@ class CheckpointedWriter:
         df.write.mode("overwrite").options(**self.write_options).parquet(path)
         return path
 
-    @staticmethod
-    def _count_rows(path: str) -> int:
-        """Row count of a written parquet dir from footers only.
-
-        Local paths read footers driver-side via pyarrow (milliseconds, no
-        Spark job); non-local paths fall back to a metadata-only Spark count.
-        """
-        if os.path.isdir(path):
-            import pyarrow.parquet as pq
-
-            return sum(
-                pq.read_metadata(os.path.join(path, f)).num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        spark = SparkSession.getActiveSession()
-        return spark.read.parquet(path).count()
-
     def commit_chunk(
         self, chunk: int, paths: dict[str, str], extra: dict | None = None
     ) -> dict:
-        """Count the written outputs (parquet footers) and commit atomically."""
-        counts = {name: self._count_rows(p) for name, p in paths.items()}
-        record = {
-            "chunk": chunk,
-            "n_rows": counts.get("data", sum(counts.values())),
-            "counts": counts,
-            "paths": dict(paths),
-            "path": paths.get("data"),
-            "lineage_id": uuid.uuid4().hex,
-            "committed_at": time.time(),
-            **(extra or {}),
+        """Commit a written chunk: one ``add_files`` snapshot of its images
+        files, with every output's footer row count in the summary.
+        Returns the new snapshot."""
+        import pyarrow.parquet as pq
+
+        files = {name: _parquet_files(p) for name, p in paths.items()}
+        counts = {
+            name: sum(pq.read_metadata(f).num_rows for f in fs)
+            for name, fs in files.items()
         }
-        self._commit(record)
-        return record
+        try:
+            self.table.metadata()
+        except FileNotFoundError:
+            self._create(files["images"][0])
+        meta = self.table.add_files(
+            files["images"],
+            summary_extra={
+                "pipeline_chunk": chunk,
+                "paths": dict(paths),
+                "counts": counts,
+                **(extra or {}),
+            },
+        )
+        return meta["snapshots"][-1]
 
-    def write_chunk_multi(
-        self, dfs: dict[str, DataFrame], chunk: int, extra: dict | None = None
-    ) -> dict:
-        """Write several named outputs for one chunk under one atomic commit.
+    def _create(self, sample_file: str) -> None:
+        """Create the ledger with the schema of a written images file's
+        footer (pyarrow, no Spark reader)."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-        Row counts for the lineage record come from reading back the written
-        parquet footers (metadata-only), so the pipeline computes each chunk
-        exactly once.
-        """
-        paths: dict[str, str] = {}
-        counts: dict[str, int] = {}
-        for name, df in dfs.items():
-            paths[name] = self.write_data(df, name, chunk)
-            counts[name] = self._count_rows(paths[name])
-        record = {
-            "chunk": chunk,
-            "n_rows": counts.get("data", sum(counts.values())),
-            "counts": counts,
-            "paths": paths,
-            "path": paths.get("data"),
-            "lineage_id": uuid.uuid4().hex,
-            "committed_at": time.time(),
-            **(extra or {}),
-        }
-        self._commit(record)
-        return record
+        schema = from_arrow_schema(pq.read_schema(sample_file))
+        SnapshotTable.create(
+            self.table.base,
+            ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields),
+        )
 
-    def read(self, spark: SparkSession, name: str = "data") -> DataFrame:
+    def read(self, spark: SparkSession, name: str = "images") -> DataFrame:
         """All committed data for one named output (uncommitted dirs ignored)."""
         paths = [
-            r.get("paths", {"data": r.get("path")}).get(name)
-            for r in self.committed().values()
+            s["summary"]["paths"][name]
+            for s in self.committed().values()
+            if name in s["summary"]["paths"]
         ]
-        paths = [p for p in paths if p]
         if not paths:
             raise FileNotFoundError(f"no committed chunks for {name!r} under {self.base}")
         return spark.read.parquet(*paths)
-
-
-def run_resumable(
-    writer: CheckpointedWriter,
-    n_chunks: int,
-    make_chunk_df,
-    fail_after: int | None = None,
-) -> list[dict]:
-    """Run chunks 0..n_chunks-1, skipping committed ones (the resume loop).
-
-    ``make_chunk_df(chunk_id) -> DataFrame`` builds each chunk's output.
-    ``fail_after`` simulates a crash after N successful commits (tests).
-    """
-    done = writer.committed()
-    records = []
-    completed = 0
-    for k in range(n_chunks):
-        if k in done:
-            continue
-        records.append(writer.write_chunk(make_chunk_df(k), k))
-        completed += 1
-        if fail_after is not None and completed >= fail_after:
-            raise RuntimeError(f"simulated crash after {completed} chunks")
-    return records

@@ -1,10 +1,11 @@
 """Iceberg-style snapshot catalog over the Parquet facade.
 
 The engine's north rule targets Iceberg tables; this container carries no
-Iceberg jars (SURVEY.md §7), so :mod:`catalog` ships chunk-level committed
-writes and this module adds the table-level Iceberg semantics on the same
-plain-Parquet substrate — the four capabilities the round-4 verdict named
-as the facade's gap:
+Iceberg jars (SURVEY.md §7), so this module provides the table-level
+Iceberg semantics on a plain-Parquet substrate. It is also the pipeline's
+only commit ledger: :mod:`catalog` commits each chunk as one ``add_files``
+snapshot. The four capabilities the round-4 verdict named as the facade's
+gap:
 
 - **snapshots**: every ``append``/``overwrite``/``compact`` produces an
   immutable snapshot (manifest = a Parquet file listing data files with
@@ -1334,18 +1335,22 @@ class SnapshotTable:
     # -- metadata tables (Iceberg's table.history / table.files analogues) ---
 
     def history(self, spark: SparkSession) -> DataFrame:
+        """The snapshot log, one row per snapshot; ``summary`` is the full
+        summary as JSON (e.g. a pipeline commit's chunk, paths and row
+        counts — query it with ``get_json_object``/``from_json``)."""
         meta = self.metadata()
         rows = [
             (s["snapshot_id"], s["parent_id"], s["timestamp_ms"],
              s["operation"], s["schema_id"],
-             s["summary"]["total_files"], s["summary"]["total_rows"])
+             s["summary"]["total_files"], s["summary"]["total_rows"],
+             json.dumps(s["summary"]))
             for s in meta["snapshots"]
         ]
         return spark.createDataFrame(
             rows,
             "snapshot_id long, parent_id long, timestamp_ms long, "
             "operation string, schema_id int, total_files long, "
-            "total_rows long",
+            "total_rows long, summary string",
         )
 
     def files(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:

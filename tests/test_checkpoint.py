@@ -9,38 +9,50 @@ from pyspark.sql import functions as F
 
 from rio_color_spark.functions.pip import pack_polygons
 from rio_color_spark.pipeline import FLAGSHIP_OPS, run_pipeline
-from rio_color_spark.sources.catalog import CheckpointedWriter, run_resumable
+from rio_color_spark.sources.catalog import CheckpointedWriter
 from rio_color_spark.sources.images import images_df
 from rio_color_spark.sources.polygons import make_polygons
+from rio_color_spark.sources.snapshots import SnapshotTable
+
+PACKED = pack_polygons(make_polygons(5))
+
+
+def _source(spark, tmp_path, n_chunks: int, rows_per_chunk: int) -> str:
+    """A parquet images table of ``n_chunks`` files, ``rows_per_chunk``
+    rows each: path input stripes one file per chunk."""
+    src = str(tmp_path / "src")
+    images_df(spark, n_chunks * rows_per_chunk, partitions=n_chunks).write.parquet(src)
+    return src
 
 
 def test_chunked_write_and_lineage(spark, tmp_path):
-    w = CheckpointedWriter(str(tmp_path / "out"))
-    run_resumable(
-        w, 4, lambda k: spark.range(k * 10, (k + 1) * 10).withColumn("chunk", F.lit(k))
-    )
+    src = _source(spark, tmp_path, 4, 10)
+    w = run_pipeline(spark, src, str(tmp_path / "out"), PACKED, n_chunks=4)
     recs = w.committed()
     assert sorted(recs) == [0, 1, 2, 3]
-    assert all(r["n_rows"] == 10 for r in recs.values())
-    assert len({r["lineage_id"] for r in recs.values()}) == 4
+    assert all(r["summary"]["counts"]["images"] == 10 for r in recs.values())
+    assert len({r["snapshot_id"] for r in recs.values()}) == 4
     assert w.read(spark).count() == 40
 
 
-def test_crash_and_resume_skips_committed(spark, tmp_path):
+def test_crash_and_resume_skips_committed(spark, tmp_path, monkeypatch):
+    src = _source(spark, tmp_path, 5, 5)
     base = str(tmp_path / "out")
-    w = CheckpointedWriter(base)
     calls = []
+    write_data = CheckpointedWriter.write_data
 
-    def make(k):
-        calls.append(k)
-        return spark.range(k * 5, (k + 1) * 5)
+    def spy(self, df, name, chunk):
+        if name == "images":
+            calls.append(chunk)
+        return write_data(self, df, name, chunk)
 
+    monkeypatch.setattr(CheckpointedWriter, "write_data", spy)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        run_resumable(w, 5, make, fail_after=2)
-    assert sorted(w.committed()) == [0, 1]
+        run_pipeline(spark, src, base, PACKED, n_chunks=5, fail_after=2)
+    assert sorted(CheckpointedWriter(base).committed()) == [0, 1]
 
-    # resume with a fresh writer over the same base
-    run_resumable(CheckpointedWriter(base), 5, make)
+    # resume: a fresh run over the same base
+    run_pipeline(spark, src, base, PACKED, n_chunks=5)
     assert calls == [0, 1, 2, 3, 4]  # chunks 0,1 NOT recomputed on resume
     assert sorted(CheckpointedWriter(base).committed()) == [0, 1, 2, 3, 4]
     assert CheckpointedWriter(base).read(spark).count() == 25
@@ -80,13 +92,13 @@ def test_pipeline_resume_equals_uninterrupted(spark, tmp_path):
 def test_pipeline_file_chunking_single_scan(spark, tmp_path):
     """Path input stripes source FILES across chunks: each chunk reads only
     its own files (no re-scan), union of chunk outputs == full input."""
-    from rio_color_spark.pipeline import chunk_readers
+    from rio_color_spark.pipeline import chunk_plan
 
     n = 300
     src = str(tmp_path / "src")
     images_df(spark, n).repartition(8).write.parquet(src)
 
-    readers = chunk_readers(spark, src, 4)
+    readers = chunk_plan(spark, src, 4)[0]
     seen_files: set[str] = set()
     total = 0
     for r in readers:
@@ -129,15 +141,15 @@ def test_fused_pip_matches_standalone_join(spark, tmp_path):
 
 def test_writer_creation_options_applied(spark, tmp_path):
     """--co analogue: writer creation options reach every chunk write."""
-    w = CheckpointedWriter(str(tmp_path / "o"), {"compression": "gzip"})
-    w.write_chunk(spark.range(10), 0)
+    src = _source(spark, tmp_path, 1, 10)
+    w = run_pipeline(spark, src, str(tmp_path / "o"), PACKED, n_chunks=1,
+                     write_options={"compression": "gzip"})
     files = [
-        f for f in os.listdir(w.chunk_path(0))
+        f for f in os.listdir(str(tmp_path / "o" / "images" / "chunk=0"))
         if f.endswith(".parquet")
     ]
     assert files and all(".gz." in f for f in files)
     assert w.read(spark).count() == 10
-
 
 
 def test_resume_rejects_rewritten_source(spark, tmp_path):
@@ -155,20 +167,21 @@ def test_resume_rejects_rewritten_source(spark, tmp_path):
         run_pipeline(spark, src, base, packed, n_chunks=2)
 
 
-def test_lineage_df_is_queryable(spark, tmp_path):
-    w = CheckpointedWriter(str(tmp_path / "out"))
-    run_resumable(w, 3, lambda k: spark.range(k * 10, (k + 1) * 10))
-    lin = w.lineage_df(spark)
-    assert lin.filter("name = 'data'").count() == 3
+def test_lineage_is_queryable_through_history(spark, tmp_path):
+    src = _source(spark, tmp_path, 3, 10)
+    w = run_pipeline(spark, src, str(tmp_path / "out"), PACKED, n_chunks=3)
+    lin = w.table.history(spark).select(
+        F.get_json_object("summary", "$.pipeline_chunk").cast("int").alias("chunk"),
+        F.get_json_object("summary", "$.counts.images").cast("long").alias("n_rows"),
+    )
+    assert lin.filter("chunk IS NOT NULL").count() == 3
     assert lin.groupBy().sum("n_rows").collect()[0][0] == 30
 
 
 def test_pipeline_snapshot_sink_addfiles(spark, tmp_path):
-    """With snapshot_base, each chunk lands as a metadata-only add-files
-    snapshot (zero data copy): per-chunk time travel, idempotent resume,
-    and crash-window healing between the two ledgers."""
-    from rio_color_spark.sources.snapshots import SnapshotTable
-
+    """With snapshot_base, the ledger lives there and each chunk lands as
+    one metadata-only add-files snapshot (zero data copy): per-chunk time
+    travel and idempotent resume."""
     n = 300
     images = images_df(spark, n)
     packed = pack_polygons(make_polygons(12))
@@ -185,14 +198,14 @@ def test_pipeline_snapshot_sink_addfiles(spark, tmp_path):
     mid_rows = t.read(spark).count()
     mid_sid = t.metadata()["current_snapshot_id"]
 
-    run_pipeline(spark, images, base, packed, n_chunks=3,
-                 snapshot_base=snap_base)  # resume: no duplicate commits
+    w = run_pipeline(spark, images, base, packed, n_chunks=3,
+                     snapshot_base=snap_base)  # resume: no duplicate commits
     snaps = t.metadata()["snapshots"]
     assert [s["summary"]["pipeline_chunk"] for s in snaps] == [0, 1, 2]
 
     # snapshot read == the writer's own readback, bytes included
     via_snap = t.read(spark)
-    via_writer = CheckpointedWriter(base).read(spark, "images")
+    via_writer = w.read(spark, "images")
     assert via_snap.count() == via_writer.count() == n
     assert (via_snap.select("image_id", F.md5("bytes").alias("h"))
             .exceptAll(via_writer.select("image_id", F.md5("bytes").alias("h")))
@@ -200,8 +213,8 @@ def test_pipeline_snapshot_sink_addfiles(spark, tmp_path):
     # time travel back to the 2-chunk state
     assert t.read(spark, snapshot_id=mid_sid).count() == mid_rows
 
-    # crash-window healing: wipe the snapshot log, rerun — all committed
-    # chunks re-register without recomputation (no new chunk parquet)
+    # wiping the ledger forgets every commit: the rerun recomputes and
+    # recommits all chunks, and the log again lists each chunk once
     import shutil
     shutil.rmtree(snap_base)
     run_pipeline(spark, images, base, packed, n_chunks=3,
@@ -215,8 +228,6 @@ def test_pipeline_snapshot_sink_addfiles(spark, tmp_path):
 def test_add_files_contract(spark, tmp_path):
     """add_files validates schema coverage, refuses partitioned specs, and
     never lets expire GC imported (external) files."""
-    from rio_color_spark.sources.snapshots import SnapshotTable
-
     ext = str(tmp_path / "ext")
     spark.range(0, 20).selectExpr("id AS a", "id * 2 AS b").write.parquet(ext)
     files = sorted(os.path.join(ext, f) for f in os.listdir(ext)
@@ -272,3 +283,57 @@ def test_single_stripe_reads_whole_dir(spark, tmp_path):
     assert set(df.inputFiles()) == set(spark.read.parquet(src).inputFiles())
     assert df.schema == spark.read.parquet(src).schema
     assert fps[0] is not None
+
+
+def test_pipeline_commit_seam_call_counts(spark, tmp_path, monkeypatch):
+    """The calls a tracer wraps to attribute pipeline time to layers: one
+    ``write_data`` per output per chunk, one ``commit_chunk`` and one
+    ``add_files`` (one metadata version) per chunk, none of them on an
+    idempotent re-run. A commit launches no Spark job and no reader."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    src = _source(spark, tmp_path, 2, 10)
+    base = str(tmp_path / "out")
+    sc = spark.sparkContext
+    calls = []
+    readers = []
+
+    def spy(owner, attr, record):
+        orig = getattr(owner, attr)
+
+        def wrapped(*args, **kwargs):
+            calls.append(record(*args))
+            return orig(*args, **kwargs)
+
+        monkeypatch.setattr(owner, attr, wrapped)
+
+    spy(CheckpointedWriter, "write_data", lambda self, df, name, chunk: (name, chunk))
+    spy(SnapshotTable, "add_files", lambda *a: "add_files")
+    commit, parquet = CheckpointedWriter.commit_chunk, DataFrameReader.parquet
+
+    def probed_commit(self, chunk, *args, **kwargs):
+        calls.append(("commit", chunk))
+        sc.setJobGroup("commit-probe", "commit-probe")
+        DataFrameReader.parquet = lambda *a, **k: readers.append(a)
+        try:
+            return commit(self, chunk, *args, **kwargs)
+        finally:
+            DataFrameReader.parquet = parquet
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(CheckpointedWriter, "commit_chunk", probed_commit)
+    w = run_pipeline(spark, src, base, PACKED, n_chunks=2, knn_k=2, knn_level=8)
+    outputs = ("images", "assignments", "knn")
+    want = []
+    for k in range(2):
+        want += [(name, k) for name in outputs] + [("commit", k), "add_files"]
+    assert calls == want
+    assert sc.statusTracker().getJobIdsForGroup("commit-probe") == []
+    assert readers == []
+    versions = os.listdir(os.path.join(w.table.base, "metadata"))
+    assert len(versions) == 1 + 2  # the create, then one per chunk
+
+    calls.clear()
+    run_pipeline(spark, src, base, PACKED, n_chunks=2, knn_k=2, knn_level=8)
+    assert calls == []
+    assert len(os.listdir(os.path.join(w.table.base, "metadata"))) == 3

@@ -203,3 +203,29 @@ def test_simhash_agg_equals_reference_column(spark, docs):
     assert len(out) > 0
     for r in out:
         assert r["one_pass"] == r["ref"], r["doc_id"]
+
+
+@pytest.mark.parametrize("mpb", ["128mb", "64kb", "1g"])
+def test_spread_accepts_spark_byte_strings(spark, tmp_path, mpb):
+    """_spread sizes scan splits from spark.sql.files.maxPartitionBytes in
+    any spelling the conf accepts (a hand-rolled parser raised ValueError
+    on '128mb'): a ~MB single-file table is re-spread under 128mb/1g
+    splits and passes through under 64kb splits (enough scan splits)."""
+    import os
+
+    src = str(tmp_path / "t")
+    spark.range(0, 200_000).selectExpr(
+        "id", "md5(cast(id AS string)) AS text"
+    ).coalesce(1).write.parquet(src)
+    df = spark.read.parquet(src)
+    size = sum(os.path.getsize(f.removeprefix("file:")) for f in df.inputFiles())
+    split = {"128mb": 128 << 20, "64kb": 64 << 10, "1g": 1 << 30}[mpb]
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+    try:
+        out = DD._spread(df)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert -(-size // (64 << 10)) >= target  # the cases really differ
+    assert (out is not df) == (-(-size // split) < target)

@@ -30,9 +30,9 @@ def test_assignments_scan_prunes_bytes(spark, tmp_path):
     src = str(tmp_path / "src")
     images_df(spark, 200).write.parquet(src)
     packed = pack_polygons(make_polygons(10))
-    w = run_pipeline(spark, src, str(tmp_path / "out"), packed, n_chunks=2)
+    run_pipeline(spark, src, str(tmp_path / "out"), packed, n_chunks=2)
 
-    meta = spark.read.parquet(w.chunk_path(0).replace("data", "images")).select(
+    meta = spark.read.parquet(str(tmp_path / "out" / "images" / "chunk=0")).select(
         "image_id", "lon", "lat", "tile_xyz", "cell_id", "poly_ids"
     )
     plan = _plan(meta)
@@ -55,11 +55,11 @@ def test_pip_join_broadcasts_cover_no_fact_shuffle(spark):
 
 
 def test_chunk_scan_reads_only_own_files(spark, tmp_path):
-    from rio_color_spark.pipeline import chunk_readers
+    from rio_color_spark.pipeline import chunk_plan
 
     src = str(tmp_path / "src")
     images_df(spark, 200).repartition(6).write.parquet(src)
-    readers = chunk_readers(spark, src, 3)
+    readers = chunk_plan(spark, src, 3)[0]
     all_files = set(spark.read.parquet(src).inputFiles())
     for r in readers:
         files = set(r().inputFiles())
